@@ -22,6 +22,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *  - Parquet nanos-as-long — TIMESTAMP(NANOS) inputs (the events table;
   *    any nano-precision producer) read as exact longs instead of failing
   *    the vectorized reader.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` —
+  *    [[graft.streaming.LocalCheckpointFileManager]]: streaming offset,
+  *    commit and state files on local paths are published with java.nio
+  *    (temp file + atomic rename) instead of Hadoop's local file system,
+  *    which forks `chmod`/`readlink` per file without libhadoop (~95 ms of
+  *    a ~213 ms live CDC trigger on 4 vCPUs). Other file systems keep
+  *    Spark's manager.
   *
   * Callers can override anything afterwards — these are defaults, not
   * policy.
@@ -38,6 +45,8 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   /** The conf key that switches every iterated-plan materialization from
     * `localCheckpoint` to RELIABLE `checkpoint`. */

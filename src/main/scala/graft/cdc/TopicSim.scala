@@ -287,7 +287,7 @@ final class TopicClient(host: String, port: Int) extends TopicLike {
   * (/root/reference/sink/kafka/kafka.go:134-255): read acked state from
   * the checkpoint, fast-path when the topic has nothing newer, otherwise
   * scan from ackedOffset+1 through the seq-dedup decoder and advance
-  * acked seq/offset/progress to what the topic actually holds. The
+  * acked seq/offset/progress to the last Commit/DDL the topic holds. The
   * producer then restarts its seq from the recovered ackedSeq, so the
   * (topic ++ re-produced ops) stream never carries a duplicate. */
 object KafkaRecovery {
@@ -312,12 +312,19 @@ object KafkaRecovery {
       val dec = new OperationDecoder(codec, lastCommitSeq = ackedSeq)
       client.fetchFrom(ackedOffset + 1).foreach { case (off, data) =>
         scanned += 1
+        // offset and seq move only TOGETHER with a Commit/DDL progress: a
+        // complete message without one (the first half of a split
+        // transaction, a Rotate flush) is re-produced after the restart,
+        // which resumes from that progress — under the same seq, so the
+        // consumer's seq dedup drops the copy already in the topic
         dec.feed(data, off).foreach { batch =>
-          ackedOffset = batch.commitOffset
-          ackedSeq = batch.commitSeq
           batch.ops.foreach { op =>
             if (op.opType == OpType.Commit || op.opType == OpType.Ddl)
-              op.progress.foreach(p => ackedProgress = p)
+              op.progress.foreach { p =>
+                ackedProgress = p
+                ackedOffset = batch.commitOffset
+                ackedSeq = batch.commitSeq
+              }
           }
         }
       }

@@ -27,8 +27,13 @@ import scala.jdk.CollectionConverters._
   * Committed offsets trim the buffer prefix, so driver memory is bounded
   * by the uncommitted window: at most `maxBuffer` events × (rendered JSON
   * + Operation) bytes — with the 2^20 default and typical ~1 KiB ops,
-  * ≈1 GiB worst case; size `maxBuffer` to the driver heap, or lower
-  * `maxEventsPerTrigger` so commits trim faster. (A disk-spill ring for
+  * ≈1 GiB worst case; size `maxBuffer` to the JVM heap. That buffer
+  * still bounds the uncommitted window; a micro-batch takes at most
+  * `maxEventsPerTrigger` events of it (default 2048,
+  * [[LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger]]), which bounds
+  * one batch's task payload and makes a backlog durable in bounded steps
+  * rather than one produce burst; lower it so commits trim faster.
+  * (A disk-spill ring for
   * the uncommitted window is the next escalation if a deployment needs a
   * deeper window than the heap allows; a single ordered protocol thread
   * is inherent to CDC — the reference's syncer goroutine is the same.)
@@ -299,14 +304,17 @@ class LiveBinlogTable(opts: CaseInsensitiveStringMap) extends Table with Support
           startGtid = Option(opts.get("startGtid")).map(Gset.parse),
           reconnect = reconnect).start()
         new LiveBinlogMicroBatchStream(feed,
-          Option(opts.get("maxEventsPerTrigger")).map(_.toLong))
+          Option(opts.get("maxEventsPerTrigger")).map(_.toLong)
+            .getOrElse(LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger))
       }
     }
 }
 
 /** Offsets reuse [[ReplayOffset]] — the (event_idx, file, pos, server_id)
-  * axis a restart resumes from. */
-class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed, maxPerTrigger: Option[Long])
+  * axis a restart resumes from. Each micro-batch advances by at most
+  * `maxPerTrigger` events. */
+class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed,
+    maxPerTrigger: Long = LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
@@ -323,8 +331,7 @@ class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed, maxPerTrigger: Option[Lon
     feed.failure.foreach(e => throw new IllegalStateException("binlog feed failed", e))
     offsetAt(feed.watermark)
   }
-  override def getDefaultReadLimit: ReadLimit =
-    maxPerTrigger.map(m => ReadLimit.maxRows(m)).getOrElse(ReadLimit.allAvailable())
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerTrigger)
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     feed.failure.foreach(e => throw new IllegalStateException("binlog feed failed", e))
     val s = start.asInstanceOf[ReplayOffset].eventIdx
@@ -347,6 +354,14 @@ class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed, maxPerTrigger: Option[Lon
   override def commit(end: Offset): Unit =
     feed.trimTo(end.asInstanceOf[ReplayOffset].eventIdx)
   override def stop(): Unit = ()
+}
+
+object LiveBinlogMicroBatchStream {
+  /** Events per micro-batch when `maxEventsPerTrigger` is not set: large
+    * enough that a backlog's per-trigger fixed cost stays small per event,
+    * small enough that no batch carries a whole backlog as one produce
+    * burst. An explicit option wins. */
+  val DefaultMaxEventsPerTrigger: Long = 2048L
 }
 
 final case class LiveSlice(events: Vector[(Long, String, String)]) extends InputPartition

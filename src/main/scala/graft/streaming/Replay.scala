@@ -46,12 +46,7 @@ object Replay {
     // reuse a live session when embedded (specs); own + stop when the app
     // entry created it
     val existing = SparkSession.getDefaultSession.filterNot(_.sparkContext.isStopped)
-    val spark = existing.getOrElse(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-replay")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = existing.getOrElse(session())
     spark.sparkContext.setLogLevel("WARN")
     val counters = new graft.metrics.Counters
     spark.streams.addListener(new graft.metrics.GraftStreamingListener(counters))
@@ -163,14 +158,18 @@ object Replay {
     }
   }
 
-  private def mainArgs(args: Array[String]): Unit = {
-    val Array(fixture, outDir) = args.take(2)
-    val spark = SparkSession.builder()
+  /** The deployment entries' session: the engine's defaults (including the
+    * fork-free streaming checkpoint writer) on a local master. */
+  private def session(): SparkSession =
+    graft.GraftSession.builder(shufflePartitions = 4)
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
       .appName("graft-replay")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  private def mainArgs(args: Array[String]): Unit = {
+    val Array(fixture, outDir) = args.take(2)
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     // operator surface: SPARK_GRAFT_ADMIN_PORT serves /status /schema
     // /ddl/* /metrics for the run (the reference's HTTP server lifecycle)
@@ -218,10 +217,9 @@ object Replay {
     // binlog positions, rotate/log-name threading happens in the source
     val totalInput =
       graft.sources.BinlogReplaySource.load(fixture.toString).size.toLong
-    import spark.implicits._
     val ds = spark.readStream.format("binlog-replay")
       .option("path", fixture.toString).load()
-      .select("seq_no", "log_name", "op_json").as[(Long, String, String)]
+      .select("seq_no", "log_name", "op_json")
     val (query, st) = startSinks(ds, outDir, includes, excludes, counters, gate,
       ckpMgr, sinkFilters, topicAddr, snapshots)
     try {
@@ -273,7 +271,6 @@ object Replay {
       reconnectBackoffMs: Long = 500L): LiveRun = {
     val ckpMgr = managerFor(outDir, ckpStorage)
     val resume = ckpMgr.getMinProgress
-    import spark.implicits._
     var reader = spark.readStream.format("binlog-live")
       .option("host", host).option("port", port.toString)
       .option("user", user).option("password", password)
@@ -286,8 +283,7 @@ object Replay {
         .option("startPos", resume.pos.pos.toString)
       if (gtidEnabled) resume.gset.foreach(g => reader = reader.option("startGtid", g.toString))
     }
-    val ds = reader.load()
-      .select("seq_no", "log_name", "op_json").as[(Long, String, String)]
+    val ds = reader.load().select("seq_no", "log_name", "op_json")
     val (query, st) = startSinks(ds, outDir, includes, excludes, counters, gate,
       ckpMgr, sinkFilters, topicAddr, snapshots)
     new LiveRun(query, st, ckpMgr)
@@ -314,15 +310,15 @@ object Replay {
   }
 
   /** The shared two-sink stack over any (seq_no, log_name, op_json)
-    * stream. Stay on the product-encoded source columns (codegen'd tuple
-    * encoder, no kryo): ALL per-op work — JSON decode, F1 global filter,
+    * stream, read by column ordinal from the batch's own plan: ALL per-op
+    * work — JSON decode, F1 global filter,
     * F3 per-sink dedup, JSON render, per-op wire encode — happens in ONE
     * executor-side pass inside foreachBatch. The OpEnvelope/Dataset forms
     * of F1/F3 (ChangeStream.globalFilter/dedupBelowCheckpoint) remain the
     * composable operator API; this is the fused hot path with the same
     * truth tables. */
   private def startSinks(
-      ds: org.apache.spark.sql.Dataset[(Long, String, String)],
+      ds: org.apache.spark.sql.DataFrame,
       outDir: Path,
       includes: Seq[String], excludes: Seq[String],
       counters: graft.metrics.Counters,
@@ -413,7 +409,7 @@ object Replay {
 
     val query = ds.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, String, String)], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         // Per-sink ordered consumption (the sink's single run-loop analogue,
         // W1), scale-shaped like a shuffle hand-off: each of the source's
         // contiguous index-range slices renders IN PARALLEL (JSON decode,
@@ -430,7 +426,10 @@ object Replay {
         Files.createDirectories(segDirPath)
         val stale = Files.list(segDirPath)
         try stale.forEach(p => Files.delete(p)) finally stale.close() // crash leftovers
-        val rdd = batch.rdd
+        // the batch's own physical plan, read by column ordinal (seq_no,
+        // log_name, op_json): `batch.rdd` would plan the batch again and
+        // codegen a tuple deserializer on every micro-batch
+        val rdd = batch.queryExecution.toRdd
         val np = rdd.getNumPartitions
         rdd.foreachPartition { it =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -441,8 +440,10 @@ object Replay {
           val ww = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
             Files.newOutputStream(seg("wire", tmp = true)), 1 << 20))
           def wstr(s: String): Unit = { val b = s.getBytes(UTF_8); ww.writeInt(b.length); ww.write(b) }
-          it.foreach { case (seqNo, logName, json) =>
-            val op = OperationJson.parse(json)
+          it.foreach { row =>
+            val seqNo = row.getLong(0)
+            val logName = row.getUTF8String(1).toString
+            val op = OperationJson.parse(row.getUTF8String(2).toString)
             // F1 global filter: row events of excluded tables drop, marker
             // ops pass (same truth table as ChangeStream.globalFilter)
             if (op.table.forall(t => globalF.matches(t.database, t.name))) {
@@ -496,6 +497,12 @@ object Replay {
         // ordered driver pass: segment files in partition order
         var lastJsonProg: Option[Progress] = None
         var lastWireProg: Option[Progress] = None
+        // the producer seq and topic offset as of lastWireProg: a message
+        // produced after it (a Rotate flush) must be re-produced under the
+        // SAME seq after a restart from lastWireProg, so the consumer's
+        // seq dedup drops it — the pairing KafkaRecovery keeps too
+        var wireAckedSeq = producer.currentSeq
+        var wireAckedOffset = ackedOffset
         var lastSeq = Long.MinValue
         val jsonCh = java.nio.channels.FileChannel.open(jsonOut,
           StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.APPEND)
@@ -572,7 +579,11 @@ object Replay {
                       val gset = if (in.readBoolean()) Some(Gset.parse(rstr())) else None
                       val prog = Progress(Position(name, pos, sid), gset)
                       if (inJson) lastJsonProg = Some(prog)
-                      if ((flags & 2) != 0) lastWireProg = Some(prog)
+                      if ((flags & 2) != 0) {
+                        lastWireProg = Some(prog)
+                        wireAckedSeq = producer.currentSeq
+                        wireAckedOffset = ackedOffset
+                      }
                       // the reference's ExecAndPersist, keyed by the DDL's
                       // own position — but statement-level incremental
                       // (the reference's tracker.go:229-240 TODO): the DDL
@@ -612,8 +623,8 @@ object Replay {
           val base = Checkpoint(p)
           ckpMgr.update("wire", topic match {
             case Some(_) => base
-              .withIntCtx("acked_seq", producer.currentSeq)
-              .withIntCtx("acked_offset", ackedOffset)
+              .withIntCtx("acked_seq", wireAckedSeq)
+              .withIntCtx("acked_offset", wireAckedOffset)
             case None => base
           })
         }

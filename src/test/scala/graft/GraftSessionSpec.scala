@@ -30,5 +30,7 @@ class GraftSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ===
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
   }
 }

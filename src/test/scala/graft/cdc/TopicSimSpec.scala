@@ -115,6 +115,61 @@ class TopicSimSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  test("kill between the split messages of one transaction: the relaunch " +
+      "re-produces the first half under its old seq, and every op arrives once") {
+    val server = new TopicServer().start()
+    try {
+      val client = new TopicClient("127.0.0.1", server.port)
+      val t2 = begin(400) +: (2L to 7L).map(id => insert(400 + 10 * id, id)) :+ commit(500)
+      // just under T2's whole payload: T2 splits into two messages, T1 fits one
+      val maxPayload = Wire.encodeOps(t2).length - 1
+      val producer = new FragmentingProducer(producerId = 1L, maxPayloadSize = maxPayload)
+
+      val msgs1 = producer.produce(trx(200, 1))
+      assert(msgs1.size == 1)
+      msgs1.foreach(m => client.produce(Wire.encodeMessage(m)))
+      val ackedAfter1 = Checkpoint(Progress(Position("mysql-bin.000008", 300, 66693), None))
+        .withIntCtx("acked_seq", msgs1.last.seq)
+        .withIntCtx("acked_offset", client.highWaterMark() - 1)
+      val msgs2 = producer.produce(t2)
+      assert(msgs2.size == 2 && !msgs2.exists(_.moreFragment))
+      client.produce(Wire.encodeMessage(msgs2.head)) // SIGKILL before the second
+
+      // the half holds no Commit: acked seq/offset stay paired with T1's progress
+      val rec = KafkaRecovery.recover(client, ackedAfter1)
+      assert(rec.scanned == 1)
+      assert(rec.ackedSeq == msgs1.last.seq)
+      assert(rec.ackedOffset == 0L)
+      assert(rec.ckp.progress.pos == Position("mysql-bin.000008", 300, 66693))
+
+      // relaunch: F3 against the recovered progress replays all of T2
+      val resumed = new FragmentingProducer(producerId = 1L, maxPayloadSize = maxPayload,
+        startSeq = rec.ackedSeq)
+      val fresh = (trx(200, 1) ++ t2).filter(op =>
+        Position("mysql-bin.000008", op.header.logPos, op.header.serverId)
+          .compare(rec.ckp.progress.pos) > 0)
+      val again = resumed.produce(fresh)
+      assert(again.map(_.seq) == msgs2.map(_.seq), "re-produced halves keep their seqs")
+      again.foreach(m => client.produce(Wire.encodeMessage(m)))
+
+      val dec = new OperationDecoder
+      val ops = client.fetchFrom(0L).flatMap { case (off, data) =>
+        dec.feed(data, off).toSeq.flatMap(_.ops)
+      }
+      val ids = ops.filter(_.opType == OpType.Insert)
+        .flatMap(_.rows).flatMap(_.after.toSeq).flatMap(_.headOption.flatten)
+      assert(ids == (1L to 7L).map(_.toString))
+      assert(ops.count(_.opType == OpType.Begin) == 2)
+      assert(ops.count(_.opType == OpType.Commit) == 2)
+
+      // a later recovery lands on T2's commit: nothing left to re-produce
+      val rec2 = KafkaRecovery.recover(client, rec.ckp)
+      assert(rec2.ackedSeq == again.last.seq)
+      assert(rec2.ackedOffset == client.highWaterMark() - 1)
+      assert(rec2.ckp.progress.pos == Position("mysql-bin.000008", 500, 66693))
+    } finally server.close()
+  }
+
   test("HA second writer: acks from produce() returns never cover a deposed " +
       "leader's appends — the recovery scan still sees them") {
     val server = new TopicServer().start()

@@ -2,7 +2,8 @@ package graft.sources
 
 import graft.cdc._
 import graft.mysql.{BinlogClient, BinlogEvents, MysqlScript, Packets}
-import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import graft.streaming.OperationJson
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -211,7 +212,7 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
   test("micro-batch stream slices the buffer with Progress offsets; commit trims") {
     val feed = newFeed
     feed.run()
-    val stream = new LiveBinlogMicroBatchStream(feed, maxPerTrigger = Some(2))
+    val stream = new LiveBinlogMicroBatchStream(feed, maxPerTrigger = 2)
 
     val o1 = stream.latestOffset(ReplayOffset.zero, ReadLimit.maxRows(2))
       .asInstanceOf[ReplayOffset]
@@ -232,6 +233,91 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
     stream.commit(o1)
     assert(feed.slice(2, 4).size == 2) // tail intact after trim
     assert(feed.watermark == 4)
+  }
+
+  private def rowsPayload(id: Int): Array[Byte] = {
+    val w = new Packets.Writer
+    w.raw(Array[Byte](9, 0, 0, 0, 0, 0)); w.u16(1)
+    w.u16(2)
+    w.lenenc(2L)
+    w.u8(0x03)
+    w.u8(0x00); w.u32(id.toLong); w.u8(2); w.eofStr("ok")
+    w.result
+  }
+
+  /** A finite feed of `trxs` one-row transactions: rotate + 3 events each. */
+  private def backlogFeed(trxs: Int): LiveBinlogFeed = {
+    var n = 0
+    def ev(tpe: Int, pos: Long, payload: Array[Byte], ts: Long = 1546300800L) = {
+      n += 1; frame(n, eventPacket(tpe, pos, payload, crc = true, timestamp = ts))
+    }
+    val events = Seq(
+      ev(FORMAT_DESCRIPTION_EVENT, 124, fdePayload(alg = 1)),
+      ev(ROTATE_EVENT, 0, new Packets.Writer().u64(4L).eofStr("mysql-bin.000099").result,
+        ts = 0)) ++
+      (0 until trxs).flatMap { i =>
+        val base = 1000L + 400L * i
+        Seq(ev(QUERY_EVENT, base, beginPayload),
+          ev(TABLE_MAP_EVENT, base + 100, tableMapPayload),
+          ev(WRITE_ROWS_V2, base + 200, rowsPayload(i)),
+          ev(XID_EVENT, base + 300, new Packets.Writer().u64(i.toLong).result))
+      } :+ frame(n + 1, eofPacket)
+    val (in, out) = script((startupFrames ++ events): _*)
+    val tracker = new SchemaTracker
+    tracker.execDdl("CREATE DATABASE shop", "")
+    tracker.execDdl("CREATE TABLE orders (id INT, name VARCHAR(100))", "shop")
+    val feed = new LiveBinlogFeed(new BinlogClient(in, out, "repl", "secret"),
+      serverId = 1001, startFile = "mysql-bin.000099", startPos = 4,
+      schemaLookup = tracker.getTableDef(_, _))
+    feed.run()
+    assert(feed.failure.isEmpty, s"feed failed: ${feed.failure}")
+    feed
+  }
+
+  /** Drives the stream the way MicroBatchExecution does under its default
+    * read limit; returns each batch's (seq_no, op_json) rows. */
+  private def drainBatches(stream: LiveBinlogMicroBatchStream,
+      feed: LiveBinlogFeed): Vector[Vector[(Long, String)]] = {
+    val batches = Vector.newBuilder[Vector[(Long, String)]]
+    val jsonCol = BinlogReplaySource.SCHEMA.fieldIndex("op_json")
+    var start = ReplayOffset.zero
+    while (start.eventIdx < feed.watermark) {
+      val end = stream.latestOffset(start, stream.getDefaultReadLimit).asInstanceOf[ReplayOffset]
+      val factory = stream.createReaderFactory()
+      batches += stream.planInputPartitions(start, end).toVector.flatMap { p =>
+        val r = factory.createReader(p)
+        Iterator.continually(r).takeWhile(_.next()).map(_.get())
+          .map(row => (row.getLong(0), row.getUTF8String(jsonCol).toString)).toVector
+      }
+      stream.commit(end)
+      start = end
+    }
+    batches.result()
+  }
+
+  test("a backlog drains in micro-batches of at most 2048 events by default; " +
+      "an explicit maxEventsPerTrigger wins; every event arrives once, in order") {
+    val trxs = 1000
+    val total = 1 + 3 * trxs // rotate + begin/insert/commit per trx
+    def check(batches: Vector[Vector[(Long, String)]]): Unit = {
+      val rows = batches.flatten
+      assert(rows.map(_._1) == (1L to total.toLong), "each event once, in seq order")
+      val ids = rows.map(r => OperationJson.parse(r._2))
+        .filter(_.opType == OpType.Insert).map(_.rows.head.after.get.head.get)
+      assert(ids == (0 until trxs).map(_.toString))
+    }
+
+    val feed = backlogFeed(trxs)
+    val byDefault = new LiveBinlogMicroBatchStream(feed)
+    assert(byDefault.getDefaultReadLimit.asInstanceOf[ReadMaxRows].maxRows == 2048)
+    val batches = drainBatches(byDefault, feed)
+    assert(batches.map(_.size) == Vector(2048, total - 2048))
+    check(batches)
+
+    val explicit = backlogFeed(trxs)
+    val small = drainBatches(new LiveBinlogMicroBatchStream(explicit, maxPerTrigger = 700), explicit)
+    assert(small.map(_.size) == Vector(700, 700, 700, 700, total - 2800))
+    check(small)
   }
 
   test("backpressure: a full uncommitted window blocks the feed until commit trims") {

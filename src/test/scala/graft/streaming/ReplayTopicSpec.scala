@@ -74,6 +74,38 @@ class ReplayTopicSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.close()
   }
 
+  test("a Rotate flushed after the last commit is re-produced under its own " +
+      "seq on restart, so the consumer sees it once") {
+    val server = new TopicServer().start()
+    try {
+      val addr = s"127.0.0.1:${server.port}"
+      val out = Files.createTempDirectory("topicrotate")
+      val rotated = Files.createTempFile("rotate-tail", ".jsonl")
+      Files.write(rotated, (Files.readAllLines(fixture).toArray.toSeq.map(_.toString) :+
+        """{"header":{"server_id":66693,"type":"rotate","timestamp":0,"log_pos":1300},""" +
+          """"next_log_name":"mysql-bin.000009","next_log_pos":4}""").mkString("\n").getBytes)
+
+      val stats1 = Replay.run(spark, rotated, out, topicAddr = Some(addr))
+      val hwm1 = server.highWaterMark
+      assert(hwm1 == stats1.wireMessages)
+      // the checkpoint pairs acked seq/offset with the last commit, not
+      // with the Rotate message that follows it
+      val ckp1 = new CkpManager(new FileCkpStorage(out.resolve("ckp"))).get("wire").get
+      assert(ckp1.getIntCtx("acked_offset", -99) == hwm1 - 2)
+      val ops1 = decodeAll(new TopicClient("127.0.0.1", server.port))
+      assert(ops1.count(op => op.opType == OpType.Rotate && op.header.logPos == 1300) == 1)
+
+      // restart: the Rotate lies past the checkpointed progress, so it is
+      // produced again — under the seq it had, which the consumer drops
+      val stats2 = Replay.run(spark, rotated, out, topicAddr = Some(addr))
+      assert(stats2.wireMessages == 1)
+      assert(server.highWaterMark == hwm1 + 1)
+      val ops2 = decodeAll(new TopicClient("127.0.0.1", server.port))
+      assert(ops2.map(op => (op.opType, op.header.logPos)) ==
+        ops1.map(op => (op.opType, op.header.logPos)), "the consumer sees every op once")
+    } finally server.close()
+  }
+
   test("same lifecycle over the modern RecordBatch dialect (kafka2:// sink)") {
     val broker = new graft.kafka.KafkaBroker().start()
     try {
