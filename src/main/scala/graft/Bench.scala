@@ -183,6 +183,23 @@ object Bench {
     shipped - prev >= FlagFloorSec && thisSess / prev > 1.25 &&
       sib.forall(_ / prev > 1.25)
 
+  /** The previous detail's per-query medians, when they can anchor this
+    * run's ratios. One measured at a DIFFERENT master/core count cannot
+    * (r17's committed detail was the driver's 8-core scaling run — pairing
+    * 32-core sessions against it flagged half the suite), nor can one that
+    * recorded no master, whose core count is unknown — the same rule
+    * [[loadSibling]] applies. A rejected detail anchors nothing, loudly. */
+  private[graft] def prevAnchor(prevPath: String, master: String): Map[String, Double] =
+    parseDetail(new java.io.File(prevPath)) match {
+      case Some((qs, _, _, m)) if m == master => qs
+      case Some((_, _, _, m)) =>
+        val why = if (m.isEmpty) "no recorded master" else s"master '$m' != '$master'"
+        System.err.println(s"[bench] WARN: previous detail $prevPath " +
+          s"REJECTED ($why) — no auto-vs-prev clause")
+        Map.empty[String, Double]
+      case None => Map.empty[String, Double]
+    }
+
   /** Cross-round comparison clause + the machine flag list, computed from
     * the SHIPPED per-query values, the raw per-session medians, and the
     * previous round's committed detail. A flag requires [[isFlag]] (both
@@ -193,18 +210,7 @@ object Bench {
       thisSession: collection.Map[String, Double],
       sibling: Option[(String, Map[String, Double])],
       prevPath: String, master: String): (String, Seq[String]) = {
-    // A previous detail measured at a DIFFERENT master/core count cannot
-    // anchor ratios (r17's committed detail was the driver's 8-core
-    // scaling run — pairing 32-core sessions against it flagged half the
-    // suite): reject it loudly and omit the clause.
-    val prev = parseDetail(new java.io.File(prevPath)) match {
-      case Some((qs, _, _, m)) if m.isEmpty || m == master => qs
-      case Some((_, _, _, m)) =>
-        System.err.println(s"[bench] WARN: previous detail $prevPath " +
-          s"REJECTED (master '$m' != '$master') — no auto-vs-prev clause")
-        Map.empty[String, Double]
-      case None => Map.empty[String, Double]
-    }
+    val prev = prevAnchor(prevPath, master)
     val ratios = shipped.toSeq.flatMap { case (n, v) =>
       prev.get(n).map(p => (n, v / p, p, v))
     }

@@ -907,8 +907,10 @@ object Dedup {
             sum($"t").as("n_truth"),
             sum($"c").as("n_candidates"),
             sum($"t" * $"c").as("n_hit"))
-          .withColumn("recall", $"n_hit".cast("double") / $"n_truth")
-          .withColumn("precision", $"n_hit".cast("double") / $"n_candidates")
+          // NULL, not DIVIDE_BY_ZERO, on a corpus with no truth pairs or
+          // no candidates — the oracle's division gives NULL there too
+          .withColumn("recall", try_divide($"n_hit".cast("double"), $"n_truth"))
+          .withColumn("precision", try_divide($"n_hit".cast("double"), $"n_candidates"))
       },
       Some(s"""
         WITH sh AS (SELECT doc_id, unnest($SHINGLES_SQL) AS s FROM documents
@@ -1183,7 +1185,8 @@ object Dedup {
           .agg(count($"i").as("n_pairs"),
             coalesce(sum(when($"t", 1L).otherwise(0L)), lit(0L)).as("n_hit"))
           .crossJoin(broadcast(nTruth))
-          .withColumn("recall", $"n_hit".cast("double") / $"n_truth")
+          // NULL on a corpus with no truth pairs, as the oracle gives
+          .withColumn("recall", try_divide($"n_hit".cast("double"), $"n_truth"))
           .select($"df_cap", $"n_truth", $"n_pairs", $"n_hit", $"recall")
           .orderBy($"df_cap")
       },

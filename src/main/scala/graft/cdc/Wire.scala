@@ -141,33 +141,39 @@ object Wire extends WireCodec {
 
   def decodeOps(bytes: Array[Byte]): Vector[Operation] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    Vector.fill(in.readInt()) {
-      val serverId = in.readLong()
-      val opType = readStr(in)
-      val ts = in.readLong()
-      val logPos = in.readLong()
-      val nextLogName = readOptStr(in)
-      val nextLogPos = if (in.readBoolean()) Some(in.readLong()) else None
-      val gtid = readOptStr(in)
-      val database = readOptStr(in)
-      val statement = readOptStr(in)
-      val table = if (!in.readBoolean()) None else Some {
-        val db = readStr(in); val name = readStr(in); val charset = readStr(in)
-        val cols = Vector.fill(in.readInt()) {
-          ColumnDef(readStr(in), readStr(in), in.readInt(), readStr(in), readStr(in),
-            in.readBoolean(), in.readBoolean())
-        }
-        TableDef(db, name, cols, charset)
+    Vector.fill(in.readInt())(readOp(in))
+  }
+
+  /** The single-record inverse of [[encodeOp]]: `decodeOp(encodeOp(op)) == op`. */
+  def decodeOp(bytes: Array[Byte]): Operation =
+    readOp(new DataInputStream(new ByteArrayInputStream(bytes)))
+
+  private def readOp(in: DataInputStream): Operation = {
+    val serverId = in.readLong()
+    val opType = readStr(in)
+    val ts = in.readLong()
+    val logPos = in.readLong()
+    val nextLogName = readOptStr(in)
+    val nextLogPos = if (in.readBoolean()) Some(in.readLong()) else None
+    val gtid = readOptStr(in)
+    val database = readOptStr(in)
+    val statement = readOptStr(in)
+    val table = if (!in.readBoolean()) None else Some {
+      val db = readStr(in); val name = readStr(in); val charset = readStr(in)
+      val cols = Vector.fill(in.readInt()) {
+        ColumnDef(readStr(in), readStr(in), in.readInt(), readStr(in), readStr(in),
+          in.readBoolean(), in.readBoolean())
       }
-      val rows = Vector.fill(in.readInt())(OpRow(readValues(in), readValues(in)))
-      val progress = if (!in.readBoolean()) None else {
-        val name = readStr(in); val pos = in.readLong(); val sid = in.readLong()
-        val gset = readOptStr(in)
-        Some(Progress(Position(name, pos, sid), gset.map(Gset.parse)))
-      }
-      Operation(OperationHeader(serverId, opType, ts, logPos),
-        nextLogName, nextLogPos, gtid, database, statement, table, rows, progress)
+      TableDef(db, name, cols, charset)
     }
+    val rows = Vector.fill(in.readInt())(OpRow(readValues(in), readValues(in)))
+    val progress = if (!in.readBoolean()) None else {
+      val name = readStr(in); val pos = in.readLong(); val sid = in.readLong()
+      val gset = readOptStr(in)
+      Some(Progress(Position(name, pos, sid), gset.map(Gset.parse)))
+    }
+    Operation(OperationHeader(serverId, opType, ts, logPos),
+      nextLogName, nextLogPos, gtid, database, statement, table, rows, progress)
   }
 
   // ---------- zlib (X6) ----------

@@ -2,9 +2,8 @@ package graft.sources
 
 import graft.cdc._
 import graft.mysql.{BinlogClient, BinlogEvents, BinlogToOps}
-import graft.streaming.OperationJson
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.BaseGenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -22,14 +21,18 @@ import scala.jdk.CollectionConverters._
   * protocol thread on the driver feeding a bounded buffer; micro-batches
   * slice the buffer; executors decode/render the generic envelope).
   *
+  * Each op is encoded ONCE, on the feed thread, with [[Wire.encodeOp]];
+  * the buffer keeps only (seq, log name, log pos, server id, wire bytes)
+  * per event, and the sink writes those bytes to the wire unchanged.
+  *
   * Startup mirrors the reference's order: connect → ROW-format
   * precondition (S2) → heartbeat period (T8) → register slave → dump.
   * Committed offsets trim the buffer prefix, so driver memory is bounded
-  * by the uncommitted window: at most `maxBuffer` events × (rendered JSON
-  * + Operation) bytes — with the 2^20 default and typical ~1 KiB ops,
-  * ≈1 GiB worst case; size `maxBuffer` to the JVM heap. That buffer
-  * still bounds the uncommitted window; a micro-batch takes at most
-  * `maxEventsPerTrigger` events of it (default 2048,
+  * by the uncommitted window: at most `maxBuffer` events × (wire record
+  * + ~100 bytes of per-event overhead) — with the 2^20 default and
+  * typical ~1 KiB ops, ≈1 GiB worst case; size `maxBuffer` to the JVM
+  * heap. That buffer still bounds the uncommitted window; a micro-batch
+  * takes at most `maxEventsPerTrigger` events of it (default 2048,
   * [[LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger]]), which bounds
   * one batch's task payload and makes a backlog durable in bounded steps
   * rather than one produce burst; lower it so commits trim faster.
@@ -53,7 +56,7 @@ final class LiveBinlogFeed(
     startGtid: Option[Gset] = None,
     reconnect: Option[LiveBinlogFeed.Reconnect] = None) {
 
-  import BinlogReplaySource.Ev
+  import LiveBinlogFeed.Ev
 
   private val buf = mutable.ArrayBuffer.empty[Ev]
   private var base = 0L // absolute index of buf(0) (committed prefix trimmed)
@@ -218,7 +221,7 @@ final class LiveBinlogFeed(
                 if (gset.isEmpty) None else Some(gset))))
             else op0
           seq += 1
-          val e = Ev(seq, logName, OperationJson.render(op), op)
+          val e = Ev(seq, logName, op.header.logPos, op.header.serverId, Wire.encodeOp(op))
           // backpressure: the socket reader blocks while the uncommitted
           // window is full — a slow consumer must not turn into unbounded
           // driver memory (commit/trimTo releases the feed)
@@ -238,6 +241,13 @@ final class LiveBinlogFeed(
 }
 
 object LiveBinlogFeed {
+  /** One buffered event: its position and its [[Wire.encodeOp]] record. */
+  final case class Ev(seqNo: Long, logName: String, logPos: Long, serverId: Long,
+      wire: Array[Byte]) {
+    /** The decoded operation (the buffer itself never holds one). */
+    def op: Operation = Wire.decodeOp(wire)
+  }
+
   /** Transport-retry policy: `factory` opens a NEW connection (socket or
     * scripted conversation); `maxRetries` bounds reconnects per feed
     * lifetime; backoff is linear (`backoffMs × attempt`). */
@@ -305,16 +315,21 @@ class LiveBinlogTable(opts: CaseInsensitiveStringMap) extends Table with Support
           reconnect = reconnect).start()
         new LiveBinlogMicroBatchStream(feed,
           Option(opts.get("maxEventsPerTrigger")).map(_.toLong)
-            .getOrElse(LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger))
+            .getOrElse(LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger),
+          org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
       }
     }
 }
 
 /** Offsets reuse [[ReplayOffset]] — the (event_idx, file, pos, server_id)
   * axis a restart resumes from. Each micro-batch advances by at most
-  * `maxPerTrigger` events. */
+  * `maxPerTrigger` events and is planned as up to `parallelism` contiguous
+  * slices of about equal bytes ([[LiveBinlogMicroBatchStream.sliceBounds]]),
+  * so a catch-up batch renders on every core while the sink still drains
+  * slices in partition order, which is seq order. */
 class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed,
-    maxPerTrigger: Long = LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger)
+    maxPerTrigger: Long = LiveBinlogMicroBatchStream.DefaultMaxEventsPerTrigger,
+    parallelism: Int = 1)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
@@ -322,7 +337,7 @@ class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed,
   private def offsetAt(idx: Long): ReplayOffset =
     if (idx <= 0) ReplayOffset.zero
     else feed.positionAt(idx) match {
-      case Some(e) => ReplayOffset(idx, e.logName, e.op.header.logPos, e.op.header.serverId)
+      case Some(e) => ReplayOffset(idx, e.logName, e.logPos, e.serverId)
       case None => ReplayOffset(idx, "", 0L, 0L) // trimmed: identity only
     }
 
@@ -345,9 +360,13 @@ class LiveBinlogMicroBatchStream(feed: LiveBinlogFeed,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ReplayOffset].eventIdx
     val e = end.asInstanceOf[ReplayOffset].eventIdx
-    // the feed buffer lives on the driver: ship the slice (a live stream
+    // the feed buffer lives on the driver: ship the slices (a live stream
     // has no executor-side replayable store; this IS the handoff point)
-    Array(LiveSlice(feed.slice(s, e).map(ev => (ev.seqNo, ev.logName, ev.json))))
+    val evs = feed.slice(s, e)
+    val bounds = LiveBinlogMicroBatchStream.sliceBounds(evs.map(_.wire.length.toLong), parallelism)
+    bounds.indices.map { k =>
+      LiveSlice(evs.slice(if (k == 0) 0 else bounds(k - 1), bounds(k))): InputPartition
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new LiveReaderFactory(BinlogReplaySource.SCHEMA)
@@ -362,10 +381,44 @@ object LiveBinlogMicroBatchStream {
     * small enough that no batch carries a whole backlog as one produce
     * burst. An explicit option wins. */
   val DefaultMaxEventsPerTrigger: Long = 2048L
+
+  /** Fewest events worth a slice of their own: a steady-rate batch (tens
+    * of ops) stays one task, whose fixed cost would outweigh its share. */
+  val MinEventsPerSlice: Int = 128
+
+  /** End indices (exclusive) of up to `parallelism` contiguous, non-empty
+    * slices of events with these byte sizes, cut where the running byte
+    * total crosses each equal share; never more than one slice per
+    * [[MinEventsPerSlice]] events. No events → one empty slice. */
+  def sliceBounds(sizes: IndexedSeq[Long], parallelism: Int): Vector[Int] = {
+    val n = sizes.length
+    val k = math.max(1, math.min(parallelism, n / MinEventsPerSlice))
+    if (k == 1) return Vector(n)
+    val total = sizes.sum
+    val out = Vector.newBuilder[Int]
+    var acc = 0L
+    var cut = 1 // next share boundary: total * cut / k
+    var i = 0
+    while (i < n) {
+      acc += sizes(i)
+      i += 1
+      if (i < n && cut < k && acc * k >= total * cut) {
+        out += i
+        // a large event may cross several boundaries: one cut for all
+        while (cut < k && acc * k >= total * cut) cut += 1
+      }
+    }
+    out += n
+    out.result()
+  }
 }
 
-final case class LiveSlice(events: Vector[(Long, String, String)]) extends InputPartition
+final case class LiveSlice(events: Vector[LiveBinlogFeed.Ev]) extends InputPartition
 
+/** Serves `required` columns of [[BinlogReplaySource.SCHEMA]]. Seq, log
+  * name, position, server id and `op_wire` come straight from the buffered
+  * event; any other column decodes the wire record, once per row, only
+  * when read — the sink reads none of them. */
 class LiveReaderFactory(required: StructType) extends PartitionReaderFactory {
   private val ordinals: Array[Int] =
     required.fieldNames.map(BinlogReplaySource.SCHEMA.fieldIndex)
@@ -375,15 +428,25 @@ class LiveReaderFactory(required: StructType) extends PartitionReaderFactory {
       private val it = slice.events.iterator
       private var cur: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) {
-          val (seqNo, logName, json) = it.next()
-          val values = BinlogReplaySource.toValues(
-            BinlogReplaySource.Ev(seqNo, logName, json, OperationJson.parse(json)))
-          cur = new GenericInternalRow(ordinals.map(values))
-          true
-        } else false
+        if (it.hasNext) { cur = new LiveRow(it.next(), ordinals); true } else false
       override def get(): InternalRow = cur
       override def close(): Unit = ()
     }
   }
+}
+
+private final class LiveRow(e: LiveBinlogFeed.Ev, ordinals: Array[Int])
+    extends BaseGenericInternalRow {
+  private lazy val op = e.op
+  override protected def genericGet(i: Int): Any = ordinals(i) match {
+    case 0 => e.seqNo
+    case 1 => org.apache.spark.unsafe.types.UTF8String.fromString(e.logName)
+    case 2 => e.serverId
+    case 5 => e.logPos
+    case 13 => e.wire
+    case k => BinlogReplaySource.column(k, e.seqNo, e.logName, op, e.wire)
+  }
+  override def numFields: Int = ordinals.length
+  override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+  override def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.cdc._
 import graft.streaming.{ChangeStream, OperationJson}
+import graft.streaming.ChangeStream.OpEnvelope
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -31,9 +32,11 @@ import scala.jdk.CollectionConverters._
   *    fixture loads — the protocol-parse stage is inherently sequential
   *    (single replication connection); everything downstream distributes.
   *  - Rows are the generic envelope: flattened header columns (filterable,
-  *    prunable) + the full operation as `op_json` for exact decode at the
-  *    consumer edge. Filters on header columns are accepted by the scan
-  *    (`SupportsPushDownFilters`) and applied before row materialization —
+  *    prunable) + the full operation as `op_wire`, its [[Wire.encodeOp]]
+  *    record, for exact decode at the consumer edge ([[Wire.decodeOp]]);
+  *    it is encoded only when the column is read. Filters on header
+  *    columns are accepted by the scan (`SupportsPushDownFilters`) and
+  *    applied before row materialization —
   *    the reference's excluded-tables-skip-row-decode pushdown
   *    (/root/reference/canal/canal.go:328-335).
   *
@@ -74,10 +77,7 @@ object BinlogReplaySource {
     StructField("n_rows", IntegerType, nullable = false),
     StructField("progress_name", StringType),
     StructField("progress_pos", LongType),
-    StructField("op_json", StringType, nullable = false)))
-
-  /** One threaded event, precomputed driver-side at fixture load. */
-  final case class Ev(seqNo: Long, logName: String, json: String, op: Operation)
+    StructField("op_wire", BinaryType, nullable = false)))
 
   /** Per-JVM parsed-fixture cache, keyed by (path, size, mtime): the
     * protocol-parse stage runs ONCE per file per JVM. Driver and executors
@@ -85,22 +85,19 @@ object BinlogReplaySource {
     * event data (a live source would ship (connection, offset range) the
     * same way). Bounded: replay fixtures are small and test-scoped. */
   private val evCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Vector[Ev]]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Vector[OpEnvelope]]()
 
-  def load(path: String): Vector[Ev] = {
+  /** The fixture's threaded events, parsed driver-side at load. */
+  def load(path: String): Vector[OpEnvelope] = {
     val p = Paths.get(path)
     val key = (path, Files.size(p), Files.getLastModifiedTime(p).toMillis)
     if (evCache.size > 8) evCache.clear() // crude cap; reload is cheap
     evCache.computeIfAbsent(key, _ => doLoad(path))
   }
 
-  private def doLoad(path: String): Vector[Ev] = {
-    val lines = Files.readAllLines(Paths.get(path)).asScala.toVector
-      .map(_.trim).filter(_.nonEmpty)
-    ChangeStream.threadLogNames(lines.iterator.map(OperationJson.parse)).toVector
-      .zip(lines)
-      .map { case (env, line) => Ev(env.seqNo, env.logName, line, env.op) }
-  }
+  private def doLoad(path: String): Vector[OpEnvelope] =
+    ChangeStream.threadLogNames(Files.readAllLines(Paths.get(path)).asScala.iterator
+      .map(_.trim).filter(_.nonEmpty).map(OperationJson.parse)).toVector
 
   /** Contiguous index-range slices in seqNo order: partition i holds seqNos
     * strictly below partition i+1's, so downstream narrow stages can restore
@@ -114,27 +111,28 @@ object BinlogReplaySource {
 
   private def u(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
 
-  def toValues(e: Ev): Array[Any] = {
-    val op = e.op
-    Array[Any](
-      e.seqNo,
-      u(e.logName),
-      op.header.serverId,
-      u(op.header.opType),
-      op.header.timestamp,
-      op.header.logPos,
-      u(op.database.orElse(op.table.map(_.database)).orNull),
-      u(op.table.map(_.name).orNull),
-      u(op.statement.orNull),
-      u(op.gtid.orNull),
-      op.rows.size,
-      u(op.progress.map(_.pos.name).orNull),
-      op.progress.map(p => java.lang.Long.valueOf(p.pos.pos)).orNull,
-      u(e.json))
+  /** Column `i` of [[SCHEMA]] for one event; `wire` (the `op_wire` value)
+    * is evaluated only when that column is asked for. */
+  def column(i: Int, seqNo: Long, logName: String, op: Operation,
+      wire: => Array[Byte]): Any = i match {
+    case 0 => seqNo
+    case 1 => u(logName)
+    case 2 => op.header.serverId
+    case 3 => u(op.header.opType)
+    case 4 => op.header.timestamp
+    case 5 => op.header.logPos
+    case 6 => u(op.database.orElse(op.table.map(_.database)).orNull)
+    case 7 => u(op.table.map(_.name).orNull)
+    case 8 => u(op.statement.orNull)
+    case 9 => u(op.gtid.orNull)
+    case 10 => op.rows.size
+    case 11 => u(op.progress.map(_.pos.name).orNull)
+    case 12 => op.progress.map(p => java.lang.Long.valueOf(p.pos.pos)).orNull
+    case 13 => wire
   }
 
   /** Evaluate a pushed filter against an event (header columns only). */
-  def eval(f: Filter, e: Ev): Boolean = {
+  def eval(f: Filter, e: OpEnvelope): Boolean = {
     def field(name: String): Option[Any] = name match {
       case "op_type" => Some(e.op.header.opType)
       case "server_id" => Some(e.op.header.serverId)
@@ -191,8 +189,8 @@ class BinlogReplayScanBuilder(path: String, maxPerTrigger: Option[Long], maxPerS
   override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    // column pruning: a projection that skips op_json (the wide column)
-    // never materializes it
+    // column pruning: a projection that skips op_wire (the wide column)
+    // never encodes it
     required = requiredSchema
 
   override def build(): Scan =
@@ -263,8 +261,9 @@ class ReplayReaderFactory(required: StructType, pushed: Array[Filter])
       private var cur: InternalRow = _
       override def next(): Boolean =
         if (it.hasNext) {
-          val values = BinlogReplaySource.toValues(it.next())
-          cur = new GenericInternalRow(ordinals.map(values))
+          val e = it.next()
+          cur = new GenericInternalRow(ordinals.map(i =>
+            BinlogReplaySource.column(i, e.seqNo, e.logName, e.op, Wire.encodeOp(e.op))))
           true
         } else false
       override def get(): InternalRow = cur
@@ -279,7 +278,7 @@ class BinlogReplayMicroBatchStream(path: String, maxPerTrigger: Option[Long],
   import BinlogReplaySource._
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
 
-  private lazy val events: Vector[Ev] = load(path)
+  private lazy val events: Vector[OpEnvelope] = load(path)
 
   /** Trigger.AvailableNow: fix the end of the replay at trigger time; the
     * per-batch ReadLimit below still paces the catch-up (same contract as

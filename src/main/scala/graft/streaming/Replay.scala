@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.cdc._
 import graft.streaming.ChangeStream._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
@@ -219,7 +221,7 @@ object Replay {
       graft.sources.BinlogReplaySource.load(fixture.toString).size.toLong
     val ds = spark.readStream.format("binlog-replay")
       .option("path", fixture.toString).load()
-      .select("seq_no", "log_name", "op_json")
+      .select("seq_no", "log_name", "op_wire")
     val (query, st) = startSinks(ds, outDir, includes, excludes, counters, gate,
       ckpMgr, sinkFilters, topicAddr, snapshots)
     try {
@@ -283,7 +285,7 @@ object Replay {
         .option("startPos", resume.pos.pos.toString)
       if (gtidEnabled) resume.gset.foreach(g => reader = reader.option("startGtid", g.toString))
     }
-    val ds = reader.load().select("seq_no", "log_name", "op_json")
+    val ds = reader.load().select("seq_no", "log_name", "op_wire")
     val (query, st) = startSinks(ds, outDir, includes, excludes, counters, gate,
       ckpMgr, sinkFilters, topicAddr, snapshots)
     new LiveRun(query, st, ckpMgr)
@@ -309,14 +311,15 @@ object Replay {
     @volatile var topic: Option[TopicLike] = None
   }
 
-  /** The shared two-sink stack over any (seq_no, log_name, op_json)
+  /** The shared two-sink stack over any (seq_no, log_name, op_wire)
     * stream, read by column ordinal from the batch's own plan: ALL per-op
-    * work — JSON decode, F1 global filter,
-    * F3 per-sink dedup, JSON render, per-op wire encode — happens in ONE
-    * executor-side pass inside foreachBatch. The OpEnvelope/Dataset forms
-    * of F1/F3 (ChangeStream.globalFilter/dedupBelowCheckpoint) remain the
-    * composable operator API; this is the fused hot path with the same
-    * truth tables. */
+    * work — wire decode, F1 global filter, F3 per-sink dedup, JSON render
+    * for the stdout sink — happens in ONE executor-side pass
+    * ([[RenderPartition]]) inside foreachBatch; the wire sink gets the
+    * source's [[Wire.encodeOp]] bytes unchanged. The OpEnvelope/Dataset
+    * forms of F1/F3 (ChangeStream.globalFilter/dedupBelowCheckpoint)
+    * remain the composable operator API; this is the fused hot path with
+    * the same truth tables. */
   private def startSinks(
       ds: org.apache.spark.sql.DataFrame,
       outDir: Path,
@@ -351,6 +354,8 @@ object Replay {
 
     val jsonOut = outDir.resolve("operations.jsonl")
     val wireOut = outDir.resolve("wire.b64l")
+    // the sources' op_wire bytes are Wire.encodeOp records, assembled into
+    // payloads as they are: the sink's codec must be the same
     val codec: WireCodec = Wire
     // K1 lifecycle against a broker (the served-topic twin): Initialize →
     // recovery scan from ackedOffset+1 → resume the producer seq from the
@@ -393,9 +398,9 @@ object Replay {
     // which is only equivalent because update("wire") happened above and
     // would silently desync under a reorder or a second caller
     var ackedOffset: Long = recoveredAckedOffset
-    // trx batching over PRE-ENCODED ops: the state machine only looks at
-    // opType, so executors can run codec.encodeOp in parallel and the
-    // driver assembles payloads by concatenation (never re-encodes)
+    // trx batching over the sources' pre-encoded ops: the state machine
+    // only looks at opType, so the driver assembles payloads by
+    // concatenation (never re-encodes)
     val batcher = new TypedTrxBatcher[(String, Array[Byte])](_._1)
 
     val globalF = CanalTableFilter(includes, excludes)
@@ -405,94 +410,43 @@ object Replay {
     val wireF = sinkFilters.getOrElse("wire", CanalTableFilter(Nil, Nil))
 
     val segDirPath = outDir.resolve("segments")
-    val segPrefix = segDirPath.toString
+    val render = new RenderPartition(segDirPath.toString, globalF, jsonF, wireF,
+      stdoutCkp, wireCkp)
+    // Spark's offset/commit logs: resume comes from ckpMgr, so nothing
+    // reads them back — a fixed place under outDir (cleared here) instead
+    // of a temporary directory a killed driver would leave behind
+    val streamCkp = outDir.resolve("spark-checkpoint")
+    deleteTree(streamCkp)
 
     val query = ds.writeStream
       .outputMode("append")
+      .option("checkpointLocation", streamCkp.toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         // Per-sink ordered consumption (the sink's single run-loop analogue,
         // W1), scale-shaped like a shuffle hand-off: each of the source's
-        // contiguous index-range slices renders IN PARALLEL (JSON decode,
-        // F1/F3 filters, JSON line render, per-op wire encode) and spills
-        // its output to an ordered per-partition SEGMENT FILE pair; the
-        // driver then streams the small segment files in partition order
-        // (= seqNo order, since slice i's seqNos are strictly below slice
-        // i+1's — no range shuffle, no sampling pass, no row re-decode) and
-        // keeps only the sequential bookkeeping: trx batching over
-        // pre-encoded fragments, seq assignment, appends, checkpoints.
+        // contiguous index-range slices renders IN PARALLEL and spills its
+        // output to an ordered per-partition SEGMENT FILE pair; the driver
+        // then streams the small segment files in partition order (= seqNo
+        // order, since slice i's seqNos are strictly below slice i+1's — no
+        // range shuffle, no sampling pass, no row re-decode) and keeps only
+        // the sequential bookkeeping: trx batching over pre-encoded
+        // fragments, seq assignment, appends, checkpoints.
         // (The earlier collect-everything driver render measured 19k ops/s
         // at 60k ops degrading to 14k at 600k; caching rendered rows in
         // Spark's columnar/object stores measured 2-3x slower than this.)
         Files.createDirectories(segDirPath)
         val stale = Files.list(segDirPath)
         try stale.forEach(p => Files.delete(p)) finally stale.close() // crash leftovers
-        // the batch's own physical plan, read by column ordinal (seq_no,
-        // log_name, op_json): `batch.rdd` would plan the batch again and
-        // codegen a tuple deserializer on every micro-batch
-        val rdd = batch.queryExecution.toRdd
-        val np = rdd.getNumPartitions
-        rdd.foreachPartition { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          def seg(kind: String, tmp: Boolean): Path =
-            Paths.get(segPrefix, f"$kind-$pid%05d" + (if (tmp) ".tmp" else ""))
-          val jw = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-            Files.newOutputStream(seg("json", tmp = true)), UTF_8), 1 << 20)
-          val ww = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-            Files.newOutputStream(seg("wire", tmp = true)), 1 << 20))
-          def wstr(s: String): Unit = { val b = s.getBytes(UTF_8); ww.writeInt(b.length); ww.write(b) }
-          it.foreach { row =>
-            val seqNo = row.getLong(0)
-            val logName = row.getUTF8String(1).toString
-            val op = OperationJson.parse(row.getUTF8String(2).toString)
-            // F1 global filter: row events of excluded tables drop, marker
-            // ops pass (same truth table as ChangeStream.globalFilter)
-            if (op.table.forall(t => globalF.matches(t.database, t.name))) {
-              // F3 as a per-sink predicate; the stream-level restart dedup
-              // is implied by min(stdout, wire)
-              def above(ckp: Progress): Boolean =
-                ckp.isZero || {
-                  val pos = Position(logName, op.header.logPos, op.header.serverId)
-                  pos.serverId != ckp.pos.serverId || pos.compare(ckp.pos) > 0
-                }
-              val inJson = above(stdoutCkp) &&
-                op.table.forall(t => jsonF.matches(t.database, t.name))
-              val inWire = above(wireCkp) &&
-                op.table.forall(t => wireF.matches(t.database, t.name))
-              if (inJson || inWire) {
-                ww.writeLong(seqNo)
-                var flags = 0
-                if (inJson) flags |= 1
-                if (inWire) flags |= 2
-                if (op.progress.isDefined) flags |= 4
-                ww.writeByte(flags)
-                wstr(op.header.opType) // always present: drives A1 counters
-                if (op.header.opType == OpType.Ddl) {
-                  // DDL payload for the driver's schema-gate replay (T7)
-                  wstr(op.database.getOrElse(""))
-                  wstr(op.statement.getOrElse(""))
-                }
-                if (inJson) { jw.write(OperationJson.render(op)); jw.write('\n') }
-                if (inWire) {
-                  val b = codec.encodeOp(op)
-                  ww.writeInt(b.length); ww.write(b)
-                }
-                op.progress.foreach { p =>
-                  wstr(p.pos.name); ww.writeLong(p.pos.pos); ww.writeLong(p.pos.serverId)
-                  p.gset.map(_.toString) match {
-                    case Some(g) => ww.writeBoolean(true); wstr(g)
-                    case None => ww.writeBoolean(false)
-                  }
-                }
-              }
-            }
-          }
-          jw.close(); ww.close()
-          // atomic publish; idempotent under task retry
-          Files.move(seg("json", tmp = true), seg("json", tmp = false),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          Files.move(seg("wire", tmp = true), seg("wire", tmp = false),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // the sink hands over the batch as a LogicalRDD over the already
+        // planned rows: run the render on that RDD itself — planning the
+        // batch again, or a closure Spark must clean, costs every trigger
+        val rdd = batch.queryExecution.logical match {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+          case other => throw new IllegalStateException(
+            s"foreachBatch handed a ${other.nodeName} plan, not the sink's LogicalRDD")
         }
+        val np = rdd.getNumPartitions
+        rdd.sparkContext.runJob(rdd, render)
 
         // ordered driver pass: segment files in partition order
         var lastJsonProg: Option[Progress] = None
@@ -633,5 +587,83 @@ object Replay {
       }
       .start()
     (query, st)
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val all = Files.walk(p)
+      try all.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally all.close()
+    }
+
+  /** One partition's render for [[startSinks]]: decode each (seq_no,
+    * log_name, op_wire) row, apply F1 and the per-sink F2/F3 predicates,
+    * and write the partition's json/wire segment pair. A named class, not
+    * a closure, so submitting it skips Spark's closure cleaning. */
+  private final class RenderPartition(segPrefix: String,
+      globalF: CanalTableFilter, jsonF: CanalTableFilter, wireF: CanalTableFilter,
+      stdoutCkp: Progress, wireCkp: Progress)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): Unit = {
+      val pid = ctx.partitionId()
+      def seg(kind: String, tmp: Boolean): Path =
+        Paths.get(segPrefix, f"$kind-$pid%05d" + (if (tmp) ".tmp" else ""))
+      val jw = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+        Files.newOutputStream(seg("json", tmp = true)), UTF_8), 1 << 20)
+      val ww = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+        Files.newOutputStream(seg("wire", tmp = true)), 1 << 20))
+      def wstr(s: String): Unit = { val b = s.getBytes(UTF_8); ww.writeInt(b.length); ww.write(b) }
+      it.foreach { row =>
+        val seqNo = row.getLong(0)
+        val logName = row.getUTF8String(1).toString
+        val wire = row.getBinary(2)
+        val op = Wire.decodeOp(wire)
+        // F1 global filter: row events of excluded tables drop, marker
+        // ops pass (same truth table as ChangeStream.globalFilter)
+        if (op.table.forall(t => globalF.matches(t.database, t.name))) {
+          // F3 as a per-sink predicate; the stream-level restart dedup
+          // is implied by min(stdout, wire)
+          def above(ckp: Progress): Boolean =
+            ckp.isZero || {
+              val pos = Position(logName, op.header.logPos, op.header.serverId)
+              pos.serverId != ckp.pos.serverId || pos.compare(ckp.pos) > 0
+            }
+          val inJson = above(stdoutCkp) &&
+            op.table.forall(t => jsonF.matches(t.database, t.name))
+          val inWire = above(wireCkp) &&
+            op.table.forall(t => wireF.matches(t.database, t.name))
+          if (inJson || inWire) {
+            ww.writeLong(seqNo)
+            var flags = 0
+            if (inJson) flags |= 1
+            if (inWire) flags |= 2
+            if (op.progress.isDefined) flags |= 4
+            ww.writeByte(flags)
+            wstr(op.header.opType) // always present: drives A1 counters
+            if (op.header.opType == OpType.Ddl) {
+              // DDL payload for the driver's schema-gate replay (T7)
+              wstr(op.database.getOrElse(""))
+              wstr(op.statement.getOrElse(""))
+            }
+            if (inJson) { jw.write(OperationJson.render(op)); jw.write('\n') }
+            if (inWire) { ww.writeInt(wire.length); ww.write(wire) }
+            op.progress.foreach { p =>
+              wstr(p.pos.name); ww.writeLong(p.pos.pos); ww.writeLong(p.pos.serverId)
+              p.gset.map(_.toString) match {
+                case Some(g) => ww.writeBoolean(true); wstr(g)
+                case None => ww.writeBoolean(false)
+              }
+            }
+          }
+        }
+      }
+      jw.close(); ww.close()
+      // atomic publish; idempotent under task retry
+      Files.move(seg("json", tmp = true), seg("json", tmp = false),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.move(seg("wire", tmp = true), seg("wire", tmp = false),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
   }
 }

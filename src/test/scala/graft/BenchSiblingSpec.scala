@@ -56,6 +56,22 @@ class BenchSiblingSpec extends AnyFunSuite {
       "local[32]").nonEmpty, "a same-master fresh sibling must pair")
   }
 
+  test("the vs-prev anchor validates MASTER like the sibling: a previous " +
+      "detail with no recorded master or a different one anchors nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("benchprevanchor").toFile
+    def write(master: String): String = {
+      val masterField = if (master.isEmpty) "" else s""","master":"$master""""
+      val f = new java.io.File(dir, "prev.json")
+      val json = s"""{"metric":"total","value":1.0,"queries":{"q01":0.5}$masterField}"""
+      java.nio.file.Files.write(f.toPath, (json + "\n").getBytes("UTF-8"))
+      f.getPath
+    }
+    assert(Bench.prevAnchor(write(""), "local[32]").isEmpty,
+      "a previous detail with no recorded master must be rejected")
+    assert(Bench.prevAnchor(write("local[8]"), "local[32]").isEmpty)
+    assert(Bench.prevAnchor(write("local[32]"), "local[32]") == Map("q01" -> 0.5))
+  }
+
   test("the official session derives its sibling's path from its own " +
       "detail path (env override aside), so a bare driver re-run pairs " +
       "with the COMMITTED sibling") {

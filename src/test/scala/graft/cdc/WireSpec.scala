@@ -43,6 +43,27 @@ class WireSpec extends AnyFunSuite {
     assert(Wire.decodeOps(Wire.encodeOps(ops)) == ops)
   }
 
+  test("decodeOp inverts encodeOp: gset progress (MySQL and MariaDB), NOT NULL " +
+      "columns, table charset, DDL and Rotate") {
+    val ops = Vector(
+      Operation(OperationHeader(1, OpType.Rotate, 0, 0),
+        nextLogName = Some("mysql-bin.000009"), nextLogPos = Some(4L)),
+      op(420).copy(table = op(420).table.map(_.copy(charset = "latin1"))),
+      Operation(OperationHeader(1, OpType.Ddl, 12, 803),
+        database = Some("test"),
+        statement = Some("ALTER TABLE test.canal_test ADD `age` INT(5) NOT NULL AFTER `name`"),
+        progress = Some(Progress(Position("mysql-bin.000008", 803, 66693),
+          Some(Gset.parse("0-77-101"))))),
+      commitOp(602))
+    ops.foreach { o =>
+      val back = Wire.decodeOp(Wire.encodeOp(o))
+      assert(back == o)
+      assert(back.table.map(_.columns.map(_.nullable)) == o.table.map(_.columns.map(_.nullable)))
+    }
+    assert(Wire.decodeOp(Wire.encodeOp(ops(1))).table.get.charset == "latin1")
+    assert(Wire.decodeOp(Wire.encodeOp(ops(1))).table.get.columns.head.nullable == false)
+  }
+
   test("zlib round-trip") {
     val data = ("abc" * 10000).getBytes("UTF-8")
     val z = Wire.compress(data)

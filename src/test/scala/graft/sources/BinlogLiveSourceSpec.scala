@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.cdc._
 import graft.mysql.{BinlogClient, BinlogEvents, MysqlScript, Packets}
-import graft.streaming.OperationJson
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -245,8 +244,32 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
     w.result
   }
 
-  /** A finite feed of `trxs` one-row transactions: rotate + 3 events each. */
-  private def backlogFeed(trxs: Int): LiveBinlogFeed = {
+  /** shop.blobs (id INT, data MEDIUMBLOB): table id 10. */
+  private def blobTableMapPayload: Array[Byte] = {
+    val w = new Packets.Writer
+    w.raw(Array[Byte](10, 0, 0, 0, 0, 0)); w.u16(1)
+    w.u8(4); w.eofStr("shop"); w.u8(0)
+    w.u8(5); w.eofStr("blobs"); w.u8(0)
+    w.lenenc(2L)
+    w.u8(3); w.u8(252) // LONG, BLOB
+    w.lenenc(1L); w.u8(3) // 3 length bytes
+    w.u8(0x03)
+    w.result
+  }
+
+  private def blobRowsPayload(bytes: Int): Array[Byte] = {
+    val w = new Packets.Writer
+    w.raw(Array[Byte](10, 0, 0, 0, 0, 0)); w.u16(1)
+    w.u16(2)
+    w.lenenc(2L)
+    w.u8(0x03)
+    w.u8(0x00); w.u32(1L); w.u24(bytes); w.raw(Array.fill[Byte](bytes)('x'.toByte))
+    w.result
+  }
+
+  /** A finite feed of `trxs` one-row transactions: rotate + 3 events each;
+    * trx `bigAt`, if any, inserts a 1.5 MiB blob row instead. */
+  private def backlogFeed(trxs: Int, bigAt: Int = -1): LiveBinlogFeed = {
     var n = 0
     def ev(tpe: Int, pos: Long, payload: Array[Byte], ts: Long = 1546300800L) = {
       n += 1; frame(n, eventPacket(tpe, pos, payload, crc = true, timestamp = ts))
@@ -257,10 +280,12 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
         ts = 0)) ++
       (0 until trxs).flatMap { i =>
         val base = 1000L + 400L * i
-        Seq(ev(QUERY_EVENT, base, beginPayload),
-          ev(TABLE_MAP_EVENT, base + 100, tableMapPayload),
-          ev(WRITE_ROWS_V2, base + 200, rowsPayload(i)),
-          ev(XID_EVENT, base + 300, new Packets.Writer().u64(i.toLong).result))
+        Seq(ev(QUERY_EVENT, base, beginPayload)) ++
+          (if (i == bigAt) Seq(ev(TABLE_MAP_EVENT, base + 100, blobTableMapPayload),
+            ev(WRITE_ROWS_V2, base + 200, blobRowsPayload(3 << 19)))
+          else Seq(ev(TABLE_MAP_EVENT, base + 100, tableMapPayload),
+            ev(WRITE_ROWS_V2, base + 200, rowsPayload(i)))) :+
+          ev(XID_EVENT, base + 300, new Packets.Writer().u64(i.toLong).result)
       } :+ frame(n + 1, eofPacket)
     val (in, out) = script((startupFrames ++ events): _*)
     val tracker = new SchemaTracker
@@ -275,19 +300,19 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
   }
 
   /** Drives the stream the way MicroBatchExecution does under its default
-    * read limit; returns each batch's (seq_no, op_json) rows. */
-  private def drainBatches(stream: LiveBinlogMicroBatchStream,
-      feed: LiveBinlogFeed): Vector[Vector[(Long, String)]] = {
-    val batches = Vector.newBuilder[Vector[(Long, String)]]
-    val jsonCol = BinlogReplaySource.SCHEMA.fieldIndex("op_json")
+    * read limit; returns each batch's slices of (seq_no, op_wire) rows. */
+  private def drainSlices(stream: LiveBinlogMicroBatchStream,
+      feed: LiveBinlogFeed): Vector[Vector[Vector[(Long, Array[Byte])]]] = {
+    val batches = Vector.newBuilder[Vector[Vector[(Long, Array[Byte])]]]
+    val wireCol = BinlogReplaySource.SCHEMA.fieldIndex("op_wire")
     var start = ReplayOffset.zero
     while (start.eventIdx < feed.watermark) {
       val end = stream.latestOffset(start, stream.getDefaultReadLimit).asInstanceOf[ReplayOffset]
       val factory = stream.createReaderFactory()
-      batches += stream.planInputPartitions(start, end).toVector.flatMap { p =>
+      batches += stream.planInputPartitions(start, end).toVector.map { p =>
         val r = factory.createReader(p)
         Iterator.continually(r).takeWhile(_.next()).map(_.get())
-          .map(row => (row.getLong(0), row.getUTF8String(jsonCol).toString)).toVector
+          .map(row => (row.getLong(0), row.getBinary(wireCol))).toVector
       }
       stream.commit(end)
       start = end
@@ -295,14 +320,18 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
     batches.result()
   }
 
+  private def drainBatches(stream: LiveBinlogMicroBatchStream,
+      feed: LiveBinlogFeed): Vector[Vector[(Long, Array[Byte])]] =
+    drainSlices(stream, feed).map(_.flatten)
+
   test("a backlog drains in micro-batches of at most 2048 events by default; " +
       "an explicit maxEventsPerTrigger wins; every event arrives once, in order") {
     val trxs = 1000
     val total = 1 + 3 * trxs // rotate + begin/insert/commit per trx
-    def check(batches: Vector[Vector[(Long, String)]]): Unit = {
+    def check(batches: Vector[Vector[(Long, Array[Byte])]]): Unit = {
       val rows = batches.flatten
       assert(rows.map(_._1) == (1L to total.toLong), "each event once, in seq order")
-      val ids = rows.map(r => OperationJson.parse(r._2))
+      val ids = rows.map(r => Wire.decodeOp(r._2))
         .filter(_.opType == OpType.Insert).map(_.rows.head.after.get.head.get)
       assert(ids == (0 until trxs).map(_.toString))
     }
@@ -318,6 +347,54 @@ class BinlogLiveSourceSpec extends AnyFunSuite {
     val small = drainBatches(new LiveBinlogMicroBatchStream(explicit, maxPerTrigger = 700), explicit)
     assert(small.map(_.size) == Vector(700, 700, 700, 700, total - 2800))
     check(small)
+  }
+
+  test("parallelism 4: a 3001-event backlog is planned as several non-empty " +
+      "contiguous slices per batch; every event arrives once, in seq order") {
+    val feed = backlogFeed(1000)
+    val batches = drainSlices(new LiveBinlogMicroBatchStream(feed, parallelism = 4), feed)
+    assert(batches.map(_.map(_.size).sum) == Vector(2048, 3001 - 2048))
+    assert(batches.map(_.size) == Vector(4, 4)) // 2048 and 953 events
+    batches.foreach(slices => assert(slices.forall(_.nonEmpty)))
+    // contiguous: each slice starts right after the previous one ends
+    val seqs = batches.flatten.map(_.map(_._1))
+    seqs.sliding(2).foreach { case Seq(a, b) => assert(b.head == a.last + 1) }
+    assert(seqs.flatten == (1L to 3001L))
+  }
+
+  test("parallelism 4: a small batch stays one slice") {
+    val feed = backlogFeed(20) // 61 events
+    val batches = drainSlices(new LiveBinlogMicroBatchStream(feed, parallelism = 4), feed)
+    assert(batches.map(_.map(_.size)) == Vector(Vector(61)))
+  }
+
+  test("parallelism 4: a batch holding a >1 MiB op is cut into contiguous " +
+      "non-empty slices by byte share") {
+    val feed = backlogFeed(400, bigAt = 100) // 1201 events, one of 1.5 MiB
+    val big = feed.slice(0, feed.watermark).find(_.wire.length > (1 << 20))
+    assert(big.isDefined)
+    val batches = drainSlices(new LiveBinlogMicroBatchStream(feed, parallelism = 4), feed)
+    assert(batches.size == 1)
+    val slices = batches.head
+    assert(slices.size >= 2 && slices.forall(_.nonEmpty))
+    assert(slices.flatten.map(_._1) == (1L to 1201L))
+    // the big op's slice ends at it: the byte share is spent there
+    val withBig = slices.indexWhere(_.exists(_._1 == big.get.seqNo))
+    assert(slices(withBig).last._1 == big.get.seqNo)
+    assert(Wire.decodeOp(slices(withBig).last._2).rows.head.after.get(1).get.length >= (3 << 19))
+  }
+
+  test("sliceBounds: equal byte shares, never empty, never more than one " +
+      "slice per MinEventsPerSlice events") {
+    import LiveBinlogMicroBatchStream.{sliceBounds, MinEventsPerSlice}
+    assert(sliceBounds(Vector.empty, 4) == Vector(0))
+    assert(sliceBounds(Vector.fill(MinEventsPerSlice * 2 - 1)(10L), 4) ==
+      Vector(MinEventsPerSlice * 2 - 1))
+    assert(sliceBounds(Vector.fill(1000)(10L), 4) == Vector(250, 500, 750, 1000))
+    assert(sliceBounds(Vector.fill(1000)(10L), 1) == Vector(1000))
+    // one huge event crosses every boundary: a single cut after it
+    val sizes = Vector.fill(600)(10L).updated(0, 1L << 30)
+    assert(sliceBounds(sizes, 4) == Vector(1, 600))
   }
 
   test("backpressure: a full uncommitted window blocks the feed until commit trims") {

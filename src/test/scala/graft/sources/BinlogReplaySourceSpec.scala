@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.cdc.Wire
 import graft.streaming.OperationJson
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -32,8 +33,10 @@ class BinlogReplaySourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val types = rows.map(_.getAs[String]("op_type")).toSeq
     assert(types.head === "rotate")
     assert(types.count(_ == "insert") >= 1)
-    // op_json round-trips through the parser
-    rows.foreach(r => OperationJson.parse(r.getAs[String]("op_json")))
+    // op_wire is the exact encoding of the fixture line's operation
+    val fixtureOps = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(fixture))
+      .toArray.map(_.toString.trim).filter(_.nonEmpty).map(OperationJson.parse).toSeq
+    assert(rows.map(r => Wire.decodeOp(r.getAs[Array[Byte]]("op_wire"))).toSeq == fixtureOps)
   }
 
   test("filter pushdown: header predicates reach the scan") {

@@ -124,6 +124,77 @@ class ReplayLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     cmds.result()
   }
 
+  /** shop.prices (id INT, amount DECIMAL(5,2) NOT NULL), table id 9. */
+  private def pricesTableMapPayload: Array[Byte] = {
+    val w = new Packets.Writer
+    w.raw(Array[Byte](9, 0, 0, 0, 0, 0)); w.u16(1)
+    w.u8(4); w.eofStr("shop"); w.u8(0)
+    w.u8(6); w.eofStr("prices"); w.u8(0)
+    w.lenenc(2L)
+    w.u8(3); w.u8(246) // LONG, NEWDECIMAL
+    w.lenenc(2L); w.u8(5); w.u8(2) // precision, scale
+    w.u8(0x01) // only id is nullable
+    w.result
+  }
+
+  /** One row (1, 1.50): DECIMAL(5,2) packs 3 integer digits in 2 bytes and
+    * 2 fraction digits in 1, sign bit flipped. */
+  private def pricesInsertPayload: Array[Byte] = {
+    val w = new Packets.Writer
+    w.raw(Array[Byte](9, 0, 0, 0, 0, 0)); w.u16(1)
+    w.u16(2)
+    w.lenenc(2L)
+    w.u8(0x03)
+    w.u8(0x00); w.u32(1L); w.raw(Array[Byte](0x80.toByte, 0x01, 0x32))
+    w.result
+  }
+
+  test("live values reach both sinks as decoded: DECIMAL 1.50 stays 1.50 on " +
+      "stdout, and the wire keeps NOT NULL and the table's charset") {
+    val out = Files.createTempDirectory("livefidelity")
+    val script = (preamble ++ Seq(
+      frame(1, eventPacket(FORMAT_DESCRIPTION_EVENT, 124, fdePayload(alg = 1), crc = true)),
+      frame(2, eventPacket(ROTATE_EVENT, 0,
+        new Packets.Writer().u64(4L).eofStr("mysql-bin.000099").result,
+        crc = true, timestamp = 0)),
+      frame(3, eventPacket(QUERY_EVENT, 220, beginPayload, crc = true)),
+      frame(4, eventPacket(TABLE_MAP_EVENT, 240, pricesTableMapPayload, crc = true)),
+      frame(5, eventPacket(WRITE_ROWS_V2, 260, pricesInsertPayload, crc = true)),
+      frame(6, eventPacket(XID_EVENT, 300, new Packets.Writer().u64(701L).result, crc = true)),
+      frame(7, eofPacket))).flatten.toArray
+    val (server, _, _) = serve(script)
+    val seedSql = Files.createTempFile("seed", ".sql")
+    Files.writeString(seedSql,
+      "CREATE DATABASE shop\nCREATE TABLE shop.prices (id INT, amount DECIMAL(5,2) NOT NULL)\n")
+    val tracker = new SchemaTracker
+    Files.readAllLines(seedSql).asScala.filter(_.nonEmpty).foreach(tracker.execDdl(_, ""))
+    val expected = tracker.getTableDef("shop", "prices").get
+    val live = Replay.runLive(spark, "127.0.0.1", server.getLocalPort,
+      "repl", "secret", serverId = 1001, outDir = out, schemaSql = Some(seedSql.toString))
+    try {
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (live.minProgress.isZero && System.nanoTime() < deadline) {
+        live.query.processAllAvailable()
+        Thread.sleep(50)
+      }
+      assert(!live.minProgress.isZero, "checkpoint must land after the trx")
+    } finally { live.stop(); server.close() }
+
+    val insertLine = Files.readAllLines(out.resolve("operations.jsonl")).asScala
+      .find(_.contains("\"type\":\"insert\"")).get
+    assert(insertLine.contains("\"after\":[1,1.50]"), insertLine)
+
+    val decoder = new OperationDecoder(Wire)
+    val wireOps = Files.readAllLines(out.resolve("wire.b64l")).asScala.zipWithIndex
+      .flatMap { case (l, i) => decoder.feed(java.util.Base64.getDecoder.decode(l), i).toSeq }
+      .flatMap(_.ops)
+    val ins = wireOps.find(_.opType == OpType.Insert).get
+    assert(ins.rows == Vector(OpRow(None, Some(Vector(Some("1"), Some("1.50"))))))
+    assert(ins.table.get == expected)
+    assert(ins.table.get.columns.map(_.nullable) == Vector(true, false))
+    assert(ins.table.get.charset == expected.charset)
+  }
+
   test("live feed → both sinks; restart resumes from the checkpoint " +
       "position on the wire and re-emits nothing; /status shows progress") {
     val out = Files.createTempDirectory("livepipe")

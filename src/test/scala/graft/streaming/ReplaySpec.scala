@@ -53,6 +53,26 @@ class ReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lines.size == 12) // no duplicates appended
   }
 
+  test("Spark's stream checkpoint is one fixed directory under outDir, " +
+      "cleared at each start: a restart reads nothing from its offset log") {
+    val out = freshDir("replayckp")
+    assert(Replay.run(spark, fixture, out).emitted == 12)
+    // a shorter fixture on the same outDir: resuming from the first run's
+    // offset log (event_idx 12) would fail the source's position check
+    val short = Files.createTempFile("short", ".jsonl")
+    Files.write(short, Files.readAllLines(fixture).asScala.filter(_.trim.nonEmpty).take(5).asJava)
+    val second = Replay.run(spark, short, out)
+    assert(second.emitted == 0) // F3: all five are at or below the checkpoint
+    def names(dir: Path): Vector[String] =
+      Files.list(dir).iterator.asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toVector.sorted
+    assert(names(out).filter(n => n.contains("checkpoint") || n.startsWith("temporary")) ==
+      Vector("spark-checkpoint"))
+    val offsets = out.resolve("spark-checkpoint").resolve("offsets")
+    assert(names(offsets) == Vector("0"), "the second run's one batch only")
+    assert(Files.readString(offsets.resolve("0")).contains("\"event_idx\":5"))
+  }
+
   test("restart from mid-stream checkpoint emits only the tail") {
     val out = freshDir("replay2")
     // pre-seed the sink checkpoint at log_pos 602 (FIXTURES.md scenario b)
